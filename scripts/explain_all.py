@@ -36,6 +36,15 @@ def main() -> None:
         "spec).  Any NEW global window must justify its bounded frame at",
         "the call site.",
         "",
+        "Small-graph note: label_propagation, kcore and bfs_reach run their",
+        "fixed rounds on the driver when the symmetrized edge set has at most",
+        "functions/graph.py MAX_EDGES rows and the node set at most MAX_NODES",
+        "rows (string or integral ids).  Their plan is then a LocalTableScan",
+        "of the driver-built result plus the operator's final sort — the",
+        "edge materialization and the two bounded gate reads ran while the",
+        "plan was built — and persist materialization works there.  Above",
+        "the gate the Spark round loops run, truncating lineage every round.",
+        "",
     ]
     for name, fn in HARNESS_QUERIES.items():
         try:
@@ -54,6 +63,8 @@ def main() -> None:
         lines += [f"## {name}", ""]
         lines.append(f"- joins: {', '.join(joins) if joins else 'none'}")
         lines.append(f"- shuffles (Exchange): {exchanges}")
+        if "LocalTableScan" in plan and "FileScan" not in plan and "Scan ExistingRDD" not in plan:
+            lines.append("- leaf: LocalTableScan (driver-built result)")
         for p in pushed[:4]:
             lines.append(f"- {p[:220]}")
         for s in schemas[:4]:

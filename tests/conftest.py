@@ -21,3 +21,19 @@ def spark() -> SparkSession:
     )
     yield session
     session.stop()
+
+
+@pytest.fixture
+def force_graph_executor(monkeypatch):
+    """Force the small-graph gate of functions/graph.py for one test:
+    ``force("driver")`` keeps every test graph on the driver rounds,
+    ``force("spark")`` (a 0-row gate) sends any graph with an edge or a
+    node to the Spark round loops."""
+    from openetlagent_spark.functions import graph
+
+    def force(executor: str) -> None:
+        limit = {"driver": 10_000, "spark": 0}[executor]
+        monkeypatch.setattr(graph, "MAX_EDGES", limit)
+        monkeypatch.setattr(graph, "MAX_NODES", limit)
+
+    return force

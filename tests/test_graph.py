@@ -296,3 +296,150 @@ def test_bfs_hops_levels_and_unreachable(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError):
         bfs_hops(nodes, edges, 0)
+
+
+# --- small-graph executor: driver rounds vs the Spark loops -----------------
+#
+# label_propagation / kcore / bfs_hops run their rounds on the driver
+# when the graph fits the MAX_EDGES / MAX_NODES gate.  Both executors
+# must return the same rows, in the same order, under the same schema —
+# including the Spark loops' treatment of duplicate, null and missing
+# nodes, which the driver rounds reproduce rather than clean up.
+
+from pathlib import Path  # noqa: E402
+
+from pyspark.sql.types import IntegerType, StructField, StructType  # noqa: E402
+
+from openetlagent_spark.functions import graph  # noqa: E402
+
+SF_0_01_DIR = str(Path(__file__).resolve().parents[1] / "perfbench" / "data" / "sf0.01")
+
+
+def _executor_of(df):
+    # the Spark loops end on a checkpointed frame (LogicalRDD); the
+    # driver rounds end on a LocalRelation
+    plan = df._jdf.queryExecution().analyzed().toString()
+    return "spark" if "LogicalRDD" in plan else "driver"
+
+
+_NOT_NULL_INT = StructType([StructField("node", IntegerType(), False)])
+_NOT_NULL_INT_EDGES = StructType(
+    [StructField("src", IntegerType(), False), StructField("dst", IntegerType(), False)]
+)
+
+_EDGE_CASES = {
+    # two triangles bridged c-d, a 4-cycle (every vote a count tie), a
+    # null node, node "b" listed twice (its label votes twice), isolated
+    # "q", edges to "zz", which is missing from nodes, and a tendril
+    # t1-t2-t3 that kcore peels one node per round
+    "string": (
+        "node string",
+        "src string, dst string",
+        ["a", "b", "b", "c", "d", "e", "f", "w", "x", "y", "z", "q", None,
+         "t1", "t2", "t3"],
+        [("a", "b"), ("b", "c"), ("a", "c"), ("d", "e"), ("e", "f"), ("d", "f"),
+         ("c", "d"), ("w", "x"), ("x", "y"), ("y", "z"), ("z", "w"),
+         ("f", "zz"), ("zz", "e"), ("f", "t1"), ("t1", "t2"), ("t2", "t3")],
+    ),
+    # bigint ids with two null nodes, a duplicated node, an edge with a
+    # null endpoint, self-loops, and endpoint 99 missing from nodes
+    "bigint": (
+        "node bigint",
+        "src bigint, dst bigint",
+        [1, 2, 3, 4, 5, 5, None, None, 7],
+        [(1, 2), (2, 3), (3, 4), (4, 1), (5, 1), (5, 99), (99, 2),
+         (None, 3), (6, 6), (7, 7), (2, 1)],
+    ),
+    # non-nullable int columns keep their nullability on both paths
+    "int_not_null": (
+        _NOT_NULL_INT,
+        _NOT_NULL_INT_EDGES,
+        [0, 1, 2, 3, 4, 5, 6],
+        [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 5), (5, 3)],
+    ),
+    # no nodes at all: empty communities and cores, a null BFS seed
+    "no_nodes": ("node bigint", "src bigint, dst bigint", [], [(1, 2), (2, 3)]),
+}
+
+_OPS = {
+    "label_propagation": lambda n, e: graph.label_propagation(n, e, iters=3),
+    "kcore": lambda n, e: graph.kcore(n, e, k=2, rounds=2),
+    "bfs_hops": lambda n, e: graph.bfs_hops(n, e, max_hops=2),
+}
+
+
+def _rows(op, df):
+    rows = [tuple(r) for r in df.collect()]
+    if op == "bfs_hops":  # the only one without a final sort
+        rows.sort(key=lambda r: (r[0] is not None, r[0]))
+    return rows
+
+
+@pytest.mark.parametrize("case", sorted(_EDGE_CASES))
+@pytest.mark.parametrize("op", sorted(_OPS))
+def test_small_graph_executor_matches_spark_loop(spark, force_graph_executor, op, case):
+    node_schema, edge_schema, node_rows, edge_rows = _EDGE_CASES[case]
+    nodes = spark.createDataFrame([(n,) for n in node_rows], node_schema)
+    edges = spark.createDataFrame(edge_rows, edge_schema)
+    out = {}
+    for executor in ("driver", "spark"):
+        force_graph_executor(executor)
+        df = _OPS[op](nodes, edges)
+        assert _executor_of(df) == executor
+        out[executor] = (df.schema, _rows(op, df))
+    assert out["driver"] == out["spark"]
+
+
+def test_small_graph_executor_works_under_persist(spark, force_graph_executor):
+    """persist materialization keeps lineage, so the Spark round loops
+    refuse it; the driver rounds need no per-round truncation and give
+    the default mode's answer."""
+    nodes = spark.createDataFrame([(n,) for n in "abcdef"], "node string")
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d"), ("d", "e")],
+        "src string, dst string",
+    )
+    want = {op: _rows(op, fn(nodes, edges)) for op, fn in _OPS.items()}
+    spark.conf.set("spark.openetlagent.materialize", "persist")
+    try:
+        for op, fn in _OPS.items():
+            force_graph_executor("driver")
+            assert _rows(op, fn(nodes, edges)) == want[op], op
+            force_graph_executor("spark")
+            with pytest.raises(ValueError, match="persist"):
+                fn(nodes, edges)
+    finally:
+        spark.conf.unset("spark.openetlagent.materialize")
+        spark.catalog.clearCache()
+
+
+def test_small_graph_gate_declines_unordered_or_mixed_types(spark):
+    """The driver rounds need Python ordering and equality to agree
+    with Spark's: double ids, and edge columns of another type than the
+    node column, keep the Spark loop."""
+    edges = spark.createDataFrame([(1, 2)], "src bigint, dst bigint")
+    sym = graph._symmetrize(edges)
+    assert graph._small_graph(spark.createDataFrame([(1,)], "node bigint"), sym)
+    assert graph._small_graph(spark.createDataFrame([(1.0,)], "node double"), sym) is None
+    assert graph._small_graph(spark.createDataFrame([(1,)], "node int"), sym) is None
+
+
+@pytest.mark.parametrize("name", ["label_propagation", "kcore", "bfs_reach"])
+def test_small_graph_queries_run_no_per_round_jobs(spark, name):
+    """At sf0.01 the domain graph sits under the gate, so a query pays
+    its input pipeline, one edge materialization and the two gate reads
+    (9-12 jobs) instead of a job chain per round (21-41 jobs)."""
+    from openetlagent_spark.plans import HARNESS_QUERIES
+
+    sc = spark.sparkContext
+    group = f"small-graph-jobs-{name}"
+    sc.setJobGroup(group, name)
+    try:
+        df = HARNESS_QUERIES[name](spark, SF_0_01_DIR)
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the store is fed asynchronously
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 15, f"{name}: {len(jobs)} jobs"

@@ -140,15 +140,15 @@ def test_cc_multi_component_truncation(spark):
         _cc_vs_oracle(spark, edges, budget)
 
 
-# --- r13 double-step cycles for the fixed-round iterative operators --------
+# --- fixed-round iterative operators: every round count, both executors ---
 #
-# label_propagation / kcore / bfs_hops now materialize every TWO rounds
-# instead of every round.  The rounds are fixed deterministic recurrences
-# with no convergence probe, so cycle grouping must be value-identical at
-# EVERY round count — including odd counts (which exercise the final
-# single-round cycle) and counts where the graph has not yet converged
-# (the CC step-budget lesson: verify the truncated states, not just the
-# fixpoint).
+# label_propagation / kcore / bfs_hops materialize their state every
+# round on the Spark path and run the same rounds over dicts on the
+# driver below the small-graph gate.  The rounds are fixed deterministic
+# recurrences with no convergence probe, so both executors must be
+# value-identical at EVERY round count — including counts where the
+# graph has not yet converged (the CC step-budget lesson: verify the
+# truncated states, not just the fixpoint).
 
 from openetlagent_spark.functions.graph import (  # noqa: E402
     bfs_hops,
@@ -184,44 +184,50 @@ _GRAPH = _CLIQUE_A + _CLIQUE_B + _PATH
 _N = 24  # nodes 0..23 (ids 4..9 and 15..19 are isolated — keep-own rows)
 
 
-def test_label_propagation_cycles_match_oracle(spark):
+def test_label_propagation_cycles_match_oracle(spark, force_graph_executor):
     nodes, edges, nodes_sql, edges_sql = _graph_frames(spark, _N, _GRAPH)
     con = duckdb.connect()
     for iters in (1, 2, 3, 4, 5):
-        got = sorted(
-            (r["node"], r["community"], r["community_size"])
-            for r in label_propagation(nodes, edges, iters=iters).collect()
-        )
         sql = label_propagation_oracle_sql(nodes_sql, edges_sql, iters=iters)
         want = sorted(
             (int(a), int(b), int(c)) for a, b, c in con.execute(sql).fetchall()
         )
-        assert got == want, f"label_propagation iters={iters}"
+        for executor in ("driver", "spark"):
+            force_graph_executor(executor)
+            got = sorted(
+                (r["node"], r["community"], r["community_size"])
+                for r in label_propagation(nodes, edges, iters=iters).collect()
+            )
+            assert got == want, f"label_propagation iters={iters} on {executor}"
 
 
-def test_kcore_cycles_match_oracle(spark):
+def test_kcore_cycles_match_oracle(spark, force_graph_executor):
     nodes, edges, nodes_sql, edges_sql = _graph_frames(spark, _N, _GRAPH)
     con = duckdb.connect()
     for rounds in (1, 2, 3, 4, 5):
-        got = sorted(
-            (r["node"], r["degree"])
-            for r in kcore(nodes, edges, k=2, rounds=rounds).collect()
-        )
         sql = kcore_oracle_sql(nodes_sql, edges_sql, k=2, rounds=rounds)
         want = sorted((int(a), int(b)) for a, b in con.execute(sql).fetchall())
-        assert got == want, f"kcore rounds={rounds}"
+        for executor in ("driver", "spark"):
+            force_graph_executor(executor)
+            got = sorted(
+                (r["node"], r["degree"])
+                for r in kcore(nodes, edges, k=2, rounds=rounds).collect()
+            )
+            assert got == want, f"kcore rounds={rounds} on {executor}"
 
 
-def test_bfs_hops_cycles_match_oracle(spark):
+def test_bfs_hops_cycles_match_oracle(spark, force_graph_executor):
     nodes, edges, nodes_sql, edges_sql = _graph_frames(spark, _N, _GRAPH)
     con = duckdb.connect()
     for hops in (1, 2, 3, 4):
-        got = sorted(
-            (r["node"], r["hops"]) for r in bfs_hops(nodes, edges, hops).collect()
-        )
         sql = bfs_hops_oracle_sql(nodes_sql, edges_sql, hops)
         want = sorted((int(a), int(b)) for a, b in con.execute(sql).fetchall())
-        assert got == want, f"bfs_hops max_hops={hops}"
+        for executor in ("driver", "spark"):
+            force_graph_executor(executor)
+            got = sorted(
+                (r["node"], r["hops"]) for r in bfs_hops(nodes, edges, hops).collect()
+            )
+            assert got == want, f"bfs_hops max_hops={hops} on {executor}"
 
 
 # --- r13 kmeans assignment as one parsed SQL expression ---------------------

@@ -52,6 +52,15 @@ def test_cc_zero_budget_raises(spark):
         connected_components(edges, max_iter=0)
 
 
+@pytest.mark.parametrize("steps", [0, -1, "0"])
+def test_cc_steps_per_cycle_below_one_raises(spark, steps):
+    from openetlagent_spark.functions.graph import connected_components
+
+    edges = spark.createDataFrame([(1, 2)], ["id_a", "id_b"])
+    with pytest.raises(ValueError, match="steps_per_cycle must be >= 1"):
+        connected_components(edges, steps_per_cycle=steps)
+
+
 # --- r14 CC cycle-depth schedule -------------------------------------------
 #
 # connected_components now chains a SCHEDULE of pushes per

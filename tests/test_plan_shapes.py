@@ -182,11 +182,7 @@ def test_neardup_verify_joins_never_broadcast_unproven(spark):
     unproven = embedding_neardup_pairs(
         emb, "vec_id", "embedding", threshold=0.3, rademacher=True
     )
-    physical = (
-        unproven._jdf.queryExecution().explainString("formatted")
-        if False
-        else unproven._jdf.queryExecution().executedPlan().toString()
-    )
+    physical = unproven._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastExchange" not in physical
     assert "SortMergeJoin" in physical
 
@@ -884,13 +880,14 @@ def test_smoothers_one_key_shuffle(spark, name):
     assert count_shuffles(plan) <= 2
 
 
-def test_label_propagation_rounds_are_mode_cuts(spark):
+def test_label_propagation_rounds_are_mode_cuts(spark, force_graph_executor):
     """Every round truncates through materialize() (the labels frame
     is referenced twice per round — without per-round truncation the
     plan doubles, the connected_components failure mode), so the
     visible plan is just the community-size window + final sort over
     the last checkpoint: one ExistingRDD leaf, no cartesian, and at
     most the two post-loop exchanges."""
+    force_graph_executor("spark")  # the shape below is the Spark loop's
     plan = plan_of(spark, "label_propagation")
     physical = plan.split("== Physical Plan ==")[-1]
     assert "CartesianProduct" not in physical
@@ -910,11 +907,12 @@ def test_temperature_mixture_one_count_shuffle(spark):
     assert count_shuffles(plan) <= 2  # denominator agg + order-by range
 
 
-def test_kcore_truncates_every_round(spark):
+def test_kcore_truncates_every_round(spark, force_graph_executor):
     """Alive sets truncate through materialize() per round (the
     double-endpoint-reference plan rule), so the visible plan is the
     final degree count over checkpointed frames: ExistingRDD leaves,
     no cartesian, bounded exchanges."""
+    force_graph_executor("spark")  # the shape below is the Spark loop's
     plan = plan_of(spark, "kcore")
     physical = plan.split("== Physical Plan ==")[-1]
     assert "CartesianProduct" not in physical
