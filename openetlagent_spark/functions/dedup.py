@@ -907,7 +907,12 @@ def embedding_neardup_pairs(
     nears the cap and candidate pairs approach corpus²/2**n_planes —
     the r12 sf10 sweep measured ~5e8 candidates at 500k vectors with
     the default n_planes=8, vs ~2e6 at n_planes=14.  Rule of thumb:
-    2**n_planes ≥ corpus / target_bucket_size."""
+    2**n_planes ≥ corpus / target_bucket_size.
+
+    ``corpus_count``, when given, must be the exact row count of ``df``:
+    it gates a broadcast of the whole vector table and the unrolled
+    cosine, and it is not checked against the frame.  ``None`` treats
+    the corpus as unbounded."""
     from .similarity import cosine_expr, infer_dim, multi_table_signatures
 
     if dim is None:

@@ -10,7 +10,9 @@ Spark-first design: the same restricted-eval compilation, but executed
 as an **Arrow-batched pandas UDF** over a struct column — batch transfer
 instead of per-row pickling (~10-100× faster than a row UDF).  The
 lambda receives a dict-like row (``r['col']``), exactly the reference's
-calling convention (app/instruct_prompt.py:81).
+calling convention (app/instruct_prompt.py:81).  The UDF column comes
+out of a one-row generator, so it is evaluated once per row even when a
+later filter reads it (see :func:`apply_application`).
 
 Return type: Polars infers it; Spark needs a declared type.  We accept a
 declared ``return_type`` on the spec, else infer by probing the lambda on
@@ -101,5 +103,21 @@ def apply_application(df: DataFrame, op: ApplicationOperation) -> DataFrame:
         return batch.apply(fn, axis=1)
 
     udf = F.pandas_udf(batch_fn, returnType=return_type)
-    struct = F.struct(*[F.col(c) for c in op.input_columns])
-    return df.withColumn(op.output_column, udf(struct))
+    value = udf(F.struct(*[F.col(c) for c in op.input_columns]))
+    # The UDF runs inside a one-row generator and its output is then
+    # placed with withColumn semantics (appended, or replacing an
+    # existing column in place).  Catalyst pushes filters through a
+    # plain projection by inlining its expressions, so a later filter on
+    # the output would evaluate the UDF a second time below the
+    # projection.  A generator's output cannot be inlined: such filters
+    # stay above the single ArrowEvalPython node, while filters on other
+    # columns still push below it into the scan.  The price is that the
+    # generator is never pruned — the UDF runs even if nothing reads its
+    # output.  The generated name is a temporary one, so that on an
+    # overwrite the UDF still reads the column's old value.
+    taken = {c.lower() for c in [*df.columns, op.output_column]}
+    tmp = "_x_application_out"
+    while tmp.lower() in taken:
+        tmp += "_"
+    generated = df.select("*", F.inline(F.array(F.struct(value.alias(tmp)))))
+    return generated.withColumn(op.output_column, F.col(tmp)).drop(tmp)

@@ -12,6 +12,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+# static conf: Python workers fork from this module (see worker_daemon.py)
+WORKER_DAEMON_MODULE = "openetlagent_spark.worker_daemon"
+_ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "openetlagent-spark", master: str | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
@@ -55,6 +59,17 @@ def get_spark(app_name: str = "openetlagent-spark", master: str | None = None) -
         # console progress bars interleave \r-terminated fragments into
         # harness stdout and corrupt line-oriented log parsing
         .config("spark.ui.showConsoleProgress", "false")
+        # Python workers fork from WORKER_DAEMON_MODULE, which stops
+        # CPython < 3.12 from re-reading pyspark.zip's 1,328-entry
+        # directory 14-16 times before every task.  Measured on a
+        # 4-core box: that re-scan was 0.17-0.26 s of worker CPU per
+        # pandas-UDF task (0.01-0.04 s without it), and a pandas UDF over
+        # 10 rows took 0.27-0.30 s of wall against 0.05-0.09 s for the
+        # same projection in the JVM.  The daemon is imported by name
+        # before any task ships files, so the engine's root goes on the
+        # workers' PYTHONPATH.
+        .config("spark.python.daemon.module", WORKER_DAEMON_MODULE)
+        .config("spark.executorEnv.PYTHONPATH", _ENGINE_ROOT)
     )
     spark = builder.getOrCreate()
     _quiet_bounded_window_warning(spark)

@@ -1,7 +1,11 @@
 #!/usr/bin/env python
 """Dump physical-plan evidence for every harness query to PLANS.md:
 join strategies, pushed filters, read schemas, exchange counts — the
-scale-hygiene audit trail (see SCALE.md)."""
+scale-hygiene audit trail (see SCALE.md).
+
+    python scripts/explain_all.py              # rewrite all of PLANS.md
+    python scripts/explain_all.py q1 q2        # rewrite only these sections
+"""
 
 from __future__ import annotations
 
@@ -13,6 +17,38 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from openetlagent_spark.plans import HARNESS_QUERIES  # noqa: E402
 from openetlagent_spark.session import get_spark  # noqa: E402
+
+
+def section(spark, sf_dir: str, name: str) -> list[str]:
+    """PLANS.md lines for one harness query, blank line included."""
+    try:
+        df = HARNESS_QUERIES[name](spark, sf_dir)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    except Exception as exc:
+        return [f"## {name}", "", f"ERROR: {exc}", ""]
+    joins = sorted(set(re.findall(r"(\w*HashJoin|\w*MergeJoin|BroadcastNestedLoopJoin)", plan)))
+    exchanges = len(re.findall(r"\bExchange (?:hashpartitioning|rangepartitioning|RoundRobin|SinglePartition)", plan))
+    formatted = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    pushed = [ln.strip() for ln in formatted.splitlines() if "PushedFilters" in ln and "[]" not in ln]
+    schemas = [ln.strip() for ln in formatted.splitlines() if "ReadSchema" in ln]
+    lines = [f"## {name}", ""]
+    lines.append(f"- joins: {', '.join(joins) if joins else 'none'}")
+    lines.append(f"- shuffles (Exchange): {exchanges}")
+    if "LocalTableScan" in plan and "FileScan" not in plan and "Scan ExistingRDD" not in plan:
+        lines.append("- leaf: LocalTableScan (driver-built result)")
+    evals = len(re.findall(r"\b(?:ArrowEvalPython|BatchEvalPython)\b", plan))
+    if evals:
+        lines.append(f"- Python UDF evaluations (ArrowEvalPython/BatchEvalPython): {evals}")
+    for g in re.findall(r"Generate (\w+\(array\(struct\([^)]*\)\)\))", plan):
+        lines.append(f"- generator: {re.sub(r'#[0-9]+L?', '', g)}")
+    for p in pushed[:4]:
+        lines.append(f"- {p[:220]}")
+    for sc in schemas[:4]:
+        lines.append(f"- {sc[:220]}")
+    lines.append("")
+    return lines
 
 
 def main() -> None:
@@ -46,31 +82,23 @@ def main() -> None:
         "the gate the Spark round loops run, truncating lineage every round.",
         "",
     ]
-    for name, fn in HARNESS_QUERIES.items():
-        try:
-            df = fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-        except Exception as exc:
-            lines += [f"## {name}", "", f"ERROR: {exc}", ""]
-            continue
-        joins = sorted(set(re.findall(r"(\w*HashJoin|\w*MergeJoin|BroadcastNestedLoopJoin)", plan)))
-        exchanges = len(re.findall(r"\bExchange (?:hashpartitioning|rangepartitioning|RoundRobin|SinglePartition)", plan))
-        formatted = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
-        pushed = [ln.strip() for ln in formatted.splitlines() if "PushedFilters" in ln and "[]" not in ln]
-        schemas = [ln.strip() for ln in formatted.splitlines() if "ReadSchema" in ln]
-        lines += [f"## {name}", ""]
-        lines.append(f"- joins: {', '.join(joins) if joins else 'none'}")
-        lines.append(f"- shuffles (Exchange): {exchanges}")
-        if "LocalTableScan" in plan and "FileScan" not in plan and "Scan ExistingRDD" not in plan:
-            lines.append("- leaf: LocalTableScan (driver-built result)")
-        for p in pushed[:4]:
-            lines.append(f"- {p[:220]}")
-        for s in schemas[:4]:
-            lines.append(f"- {s[:220]}")
-        lines.append("")
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
+    names = sys.argv[1:]
+    if names:
+        with open(path) as f:
+            text = f.read()
+        for name in names:
+            start = text.index(f"\n## {name}\n") + 1
+            end = text.find("\n## ", start)
+            end = len(text) if end < 0 else end + 1
+            text = text[:start] + "\n".join(section(spark, sf_dir, name)) + "\n" + text[end:]
+        with open(path, "w") as f:
+            f.write(text)
+        print(f"rewrote {len(names)} PLANS.md section(s)")
+        return
+    for name in HARNESS_QUERIES:
+        lines += section(spark, sf_dir, name)
+    with open(path, "w") as f:
         f.write("\n".join(lines))
     print(f"wrote PLANS.md ({len(HARNESS_QUERIES)} queries)")
 

@@ -3,6 +3,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import SparkSession
 
+from openetlagent_spark.session import WORKER_DAEMON_MODULE
+
 
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:
@@ -17,6 +19,9 @@ def spark() -> SparkSession:
         # min/max stats (INT96 does not), needed for range-layout pruning
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.ui.enabled", "false")
+        # match session.get_spark: Python workers fork from the engine's
+        # daemon, so tests run the production worker path
+        .config("spark.python.daemon.module", WORKER_DAEMON_MODULE)
         .getOrCreate()
     )
     yield session

@@ -3,8 +3,10 @@ fold/unfold (reshape) — the reference's trickiest parity points."""
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from openetlagent_spark.model import (
     ApplicationOperation,
@@ -63,6 +65,53 @@ def test_application_sandbox_allows_core_types(spark):
         return_type="string",
     )
     assert apply_application(df, op).collect()[0].n == "3"
+
+
+def _with_column_application(df, op):
+    """application's earlier form: the pandas UDF placed by a plain
+    ``withColumn``.  The generator form must match it."""
+    from openetlagent_spark.operators.application import _infer_return_type
+
+    fn = compile_lambda(op.function_str)
+
+    def batch_fn(batch: pd.DataFrame) -> pd.Series:
+        return batch.apply(fn, axis=1)
+
+    udf = F.pandas_udf(batch_fn, returnType=_infer_return_type(df, op, fn))
+    return df.withColumn(op.output_column, udf(F.struct(*op.input_columns)))
+
+
+@pytest.mark.parametrize(
+    "inputs,function_str,output,return_type",
+    [
+        (["a", "b"], "lambda r: r['a'] * 10 + len(r['b'])", "c", "integer"),
+        # overwrite: the column keeps its position, the lambda reads the old value
+        (["a", "b"], "lambda r: r['a'] * 10 + len(r['b'])", "a", "integer"),
+        # overwrite of a column the lambda does not read
+        (["a"], "lambda r: str(r['a'])", "b", "string"),
+        # inferred type of an all-None lambda: string
+        (["b"], "lambda r: None", "c", None),
+        # an output named like the operator's temporary column
+        (["a"], "lambda r: r['a'] + 1", "_x_application_out", "integer"),
+    ],
+    ids=["new", "overwrite_input", "overwrite_other", "returns_none", "temp_name"],
+)
+def test_application_matches_with_column_form(spark, inputs, function_str, output, return_type):
+    df = spark.createDataFrame(
+        [Row(a=1, b="x", z=0.5), Row(a=2, b="yy", z=None), Row(a=3, b="zzz", z=1.5)]
+    )
+    op = ApplicationOperation(
+        input_columns=inputs,
+        function_str=function_str,
+        output_column=output,
+        return_type=return_type,
+    )
+    got = apply_application(df, op)
+    want = _with_column_application(df, op)
+    assert got.schema == want.schema  # names, order, types, nullability
+    assert sorted(got.collect()) == sorted(want.collect())
+    if output == "a":
+        assert sorted(r.a for r in got.collect()) == [11, 22, 33]
 
 
 # --- bind ------------------------------------------------------------------

@@ -259,6 +259,19 @@ def test_ewma_fold_values_and_lookback(spark):
     assert [r.ewma for r in out2] == [8.0, 6.0, 3.0]
 
 
+def test_ewma_engines_declare_equal_schemas(spark):
+    # the Arrow kernel can emit a NULL ewma, so its declared column must
+    # be nullable exactly like the JVM fold's
+    from openetlagent_spark.functions.timeseries import ewma_smooth
+
+    df = spark.createDataFrame([Row(k="a", ts=_t(0), eid=0, v=1.0)])
+    jvm, arrow = (
+        ewma_smooth(df, "k", "ts", "eid", "v", engine=e).schema for e in ("jvm", "arrow")
+    )
+    assert arrow == jvm
+    assert jvm["ewma"].nullable
+
+
 def test_ewma_drops_null_rows_and_validates(spark):
     from openetlagent_spark.functions.timeseries import ewma_smooth
 

@@ -1274,3 +1274,43 @@ def test_ks_cumsum_is_pid_local(spark):
         spec = m.group(1)
         if "ASC" in spec or "DESC" in spec:
             assert "_x_pid" in spec, f"global ordered window leaked: {spec}"
+
+
+def test_benford_flow_evaluates_application_once(spark):
+    """benford_audit filters its input column (> 0).  The application
+    UDF that produces that column must still run once: the filter stays
+    above the generator instead of re-evaluating the inlined UDF below
+    the projection (which gave two ArrowEvalPython nodes)."""
+    import os
+
+    from openetlagent_spark.model import load_pipeline_config, load_pipeline_flow
+    from openetlagent_spark.runner import apply_operations
+    from openetlagent_spark.sources import scan_data
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    config = load_pipeline_config(os.path.join(root, "examples/curation_config.yaml"))
+    flow = load_pipeline_flow(os.path.join(root, "examples/pipelines/benford_fraud_screen.yaml"))
+    df = scan_data(spark, config.inputs[flow.source])
+    out = apply_operations(df, flow.operations, spark, config.inputs)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
+def test_application_keeps_unrelated_filters_pushed(spark):
+    """A filter on a column the application did not produce still
+    reaches the parquet scan's PushedFilters."""
+    from openetlagent_spark.model import ApplicationOperation
+    from openetlagent_spark.operators import apply_application
+
+    op = ApplicationOperation(
+        input_columns=["o_totalprice"],
+        function_str="lambda r: (r['o_totalprice'] * 100).round(0)",
+        output_column="cents",
+        return_type="integer",
+    )
+    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
+    out = apply_application(orders, op).where("o_orderstatus = 'F' AND cents > 0")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    pushed = [l for l in plan.splitlines() if "PushedFilters: [" in l]
+    assert any("EqualTo(o_orderstatus,F)" in l for l in pushed), plan
+    assert plan.count("ArrowEvalPython") == 1, plan
